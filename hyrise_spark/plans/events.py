@@ -2089,9 +2089,11 @@ def events_linear_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
 #   difference       (37,0)-(37,0) -> (38,0), then one CAST to DOUBLE.
 # Identical results wherever the old INT64 form was exact (sf0.001/0.01);
 # past the documented envelope both engines now fail LOUDLY (DuckDB
-# raises, Spark nulls) instead of wrapping.
-_SEASONAL_STRENGTH_SQL = """
-    WITH hourly AS (
+# raises, Spark nulls) instead of wrapping. The clamp to 0 applies only
+# to non-NULL ratios: Spark's GREATEST skips NULLs, so GREATEST(0.0, NULL)
+# would turn that overflow NULL into a plausible 0.0.
+_SEASONAL_STATS_CTES = """
+    hourly AS (
       SELECT event_type, date_trunc('hour', ts) AS h,
              CAST(COUNT(*) AS BIGINT) AS y
       FROM events GROUP BY event_type, date_trunc('hour', ts)
@@ -2120,31 +2122,47 @@ _SEASONAL_STRENGTH_SQL = """
                AS DECIMAL(30,0)) AS srr
       FROM seasonal GROUP BY event_type
     )
-    SELECT event_type, n,
-           ROUND(GREATEST(0.0, 1.0 -
-                 CAST(CAST(CAST(n AS DECIMAL(7,0)) * srr AS DECIMAL(37,0))
-                      - CAST(CAST(sr AS DECIMAL(18,0))
-                             * CAST(sr AS DECIMAL(18,0)) AS DECIMAL(37,0))
-                   AS DOUBLE)
-                 / NULLIF(CAST(CAST(CAST(n AS DECIMAL(7,0)) * sdd
-                                 AS DECIMAL(37,0))
-                      - CAST(CAST(sd AS DECIMAL(18,0))
-                             * CAST(sd AS DECIMAL(18,0)) AS DECIMAL(37,0))
-                   AS DOUBLE), 0)), 6)
-               AS strength_seasonal,
-           ROUND(GREATEST(0.0, 1.0 -
-                 CAST(CAST(CAST(n AS DECIMAL(7,0)) * sdd AS DECIMAL(37,0))
-                      - CAST(CAST(sd AS DECIMAL(18,0))
-                             * CAST(sd AS DECIMAL(18,0)) AS DECIMAL(37,0))
-                   AS DOUBLE)
-                 / NULLIF(CAST(CAST(CAST(n AS DECIMAL(7,0)) * syy
-                                 AS DECIMAL(37,0))
-                      - CAST(CAST(sy AS DECIMAL(18,0))
-                             * CAST(sy AS DECIMAL(18,0)) AS DECIMAL(37,0))
-                   AS DOUBLE) * 1000000 * 1000000, 0)), 6)
-               AS strength_trend
-    FROM stats ORDER BY event_type
 """
+
+# Reads `stats`; split out so a unit test can feed it out-of-envelope sums.
+_SEASONAL_STRENGTH_SELECT = """
+    ratios AS (
+      SELECT event_type, n,
+             1.0 -
+               CAST(CAST(CAST(n AS DECIMAL(7,0)) * srr AS DECIMAL(37,0))
+                    - CAST(CAST(sr AS DECIMAL(18,0))
+                           * CAST(sr AS DECIMAL(18,0)) AS DECIMAL(37,0))
+                 AS DOUBLE)
+               / NULLIF(CAST(CAST(CAST(n AS DECIMAL(7,0)) * sdd
+                               AS DECIMAL(37,0))
+                    - CAST(CAST(sd AS DECIMAL(18,0))
+                           * CAST(sd AS DECIMAL(18,0)) AS DECIMAL(37,0))
+                 AS DOUBLE), 0) AS ratio_seasonal,
+             1.0 -
+               CAST(CAST(CAST(n AS DECIMAL(7,0)) * sdd AS DECIMAL(37,0))
+                    - CAST(CAST(sd AS DECIMAL(18,0))
+                           * CAST(sd AS DECIMAL(18,0)) AS DECIMAL(37,0))
+                 AS DOUBLE)
+               / NULLIF(CAST(CAST(CAST(n AS DECIMAL(7,0)) * syy
+                               AS DECIMAL(37,0))
+                    - CAST(CAST(sy AS DECIMAL(18,0))
+                           * CAST(sy AS DECIMAL(18,0)) AS DECIMAL(37,0))
+                 AS DOUBLE) * 1000000 * 1000000, 0) AS ratio_trend
+      FROM stats
+    )
+    SELECT event_type, n,
+           ROUND(CASE WHEN ratio_seasonal < 0.0 THEN 0.0
+                       ELSE ratio_seasonal END, 6)
+               AS strength_seasonal,
+           ROUND(CASE WHEN ratio_trend < 0.0 THEN 0.0
+                       ELSE ratio_trend END, 6)
+               AS strength_trend
+    FROM ratios ORDER BY event_type
+"""
+
+_SEASONAL_STRENGTH_SQL = (
+    f"WITH {_SEASONAL_STATS_CTES.strip()},{_SEASONAL_STRENGTH_SELECT}"
+)
 
 
 @register(

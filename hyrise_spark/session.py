@@ -18,6 +18,22 @@ from pyspark.sql import SparkSession
 
 _WAREHOUSE_DIR: str | None = None
 
+# Entries in Spark's compiled-class cache (CodeGenerator's LRU of
+# Janino-compiled generated classes) — the analog of the reference's GDFS
+# plan cache (src/lib/sql/sql_plan_cache.hpp): a repeated query skips the
+# per-repeat translation cost. Spark's default of 100 is smaller than one
+# pass of perfbench's 11 batch ops (~186 classes), so the LRU thrashed and
+# every pass recompiled everything. Measured on a 4-core VM, one session,
+# the 11 ops at sf0.01 (tools/codegen_probe.py --passes 4): at 100 entries
+# 177 compiles (~1.8 s of compile time) per warm pass, 7.9 s for the 4th
+# pass, 163 MB Metaspace; at 2000 entries 0 compiles per warm pass, 6.7 s,
+# 160 MB Metaspace. 2000 leaves room for the 515-query registry and the
+# test suite sharing one JVM; over the default pytest run Metaspace ends
+# at 234 MB against 222 MB at the default size.
+# Static conf, and CodeGenerator builds its cache once per JVM: the first
+# session in a JVM fixes the size for every later context restart.
+CODEGEN_CACHE_MAX_ENTRIES = 2000
+
 
 def _process_warehouse_dir() -> str:
     """One unique managed-table warehouse per process, removed at exit.
@@ -106,6 +122,8 @@ def get_spark(app_name: str = "hyrise_spark", cpus: int | None = None) -> SparkS
         # thresholds (creationSideThreshold / scan-size) gate it so tiny
         # local inputs don't pay — it kicks in exactly at warehouse scale.
         .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
+        # Compiled-class cache sized to the working set (see the constant).
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_MAX_ENTRIES))
         # Per-PROCESS warehouse dir: managed tables (the bucketed/analyzed
         # layout variants) are session-scoped caches, but the default
         # ./spark-warehouse is shared by every process running from the

@@ -21,6 +21,7 @@ import pytest
 
 from hyrise_spark.registry import all_queries
 from tests.conftest import SF_DIR
+from tools.codegen_probe import batch_ops
 
 QUERIES = all_queries()
 
@@ -598,8 +599,26 @@ def _unbounded_global_windows(df) -> list[str]:
     return hits
 
 
-@pytest.mark.slow  # registry-wide sweep (515 plan builds, ~4 min) — full run only
-@pytest.mark.parametrize("name", sorted(QUERIES))
+# Default-run subset of the two registry-wide plan lints below: perfbench's
+# 11 batch ops plus the most join-heavy TPC-DS / JOB plans (6-17 joins in
+# the optimized plan). The full sweeps are `slow` (515 plan builds each);
+# the checks themselves are identical for every name.
+_LINT_SMOKE = frozenset(
+    list(batch_ops())
+    + ["tpcds_q64", "tpcds_q24", "tpcds_q29", "tpcds_q25", "tpcds_q14"]
+    + ["job_q42", "job_q41", "job_q13", "job_q65", "job_q35"]
+)
+
+
+def _registry_sweep():
+    """Every registered name; all but the smoke subset are `slow`."""
+    return [
+        pytest.param(n, marks=() if n in _LINT_SMOKE else pytest.mark.slow)
+        for n in sorted(QUERIES)
+    ]
+
+
+@pytest.mark.parametrize("name", _registry_sweep())
 def test_registry_plan_hygiene(spark, name):
     """Every registered query, explain-only: (1) no CartesianProduct — the
     documented all-pairs baselines use a broadcast nested-loop with a
@@ -787,8 +806,7 @@ def _unbounded_broadcast_hints(df) -> list[str]:
     return hits
 
 
-@pytest.mark.slow  # registry-wide sweep (515 plan builds, ~1.5 min) — full run only
-@pytest.mark.parametrize("name", sorted(QUERIES))
+@pytest.mark.parametrize("name", _registry_sweep())
 def test_registry_no_unbounded_broadcast_hints(spark, name):
     """Every registered query: no broadcast hint may force a frame that
     scales with data volume into the 8 GB broadcast dead-end. Bounded

@@ -130,6 +130,24 @@ def test_cross_correlation_bounds_and_selfccf(spark):
     assert all(abs(r.ccf) <= 1.0 for r in rows)
 
 
+def test_seasonal_strength_keeps_overflow_null(spark):
+    """Past the decimal envelope (here n >= 1e7 points: CAST(n AS
+    DECIMAL(7,0)) nulls) a strength must come out NULL, not the plausible
+    0.0 that GREATEST(0.0, NULL) gives. In-envelope negative ratios still
+    clamp to 0."""
+    from hyrise_spark.plans.events import _SEASONAL_STRENGTH_SELECT
+
+    d = "CAST({} AS DECIMAL(30,0))".format
+    stats = f"""stats AS (SELECT * FROM VALUES
+        ('inside', 4L, 10L, {d(30)}, 0L, {d(8)}, 0L, {d(20)}),
+        ('outside', 10000000L, 10L, {d(30)}, 0L, {d(8)}, 0L, {d(20)})
+        AS t(event_type, n, sy, syy, sd, sdd, sr, srr))"""
+    rows = spark.sql(f"WITH {stats},{_SEASONAL_STRENGTH_SELECT}").collect()
+    got = {r.event_type: (r.strength_seasonal, r.strength_trend) for r in rows}
+    # inside: seasonal 1 - 80/32 < 0 clamps; trend 1 - 32/(20 * 1e12) rounds to 1
+    assert got == {"inside": (0.0, 1.0), "outside": (None, None)}
+
+
 def test_window_distinct_matches_groupby(spark):
     """Partition-wide COUNT(DISTINCT) OVER must equal the GROUP BY
     distinct count joined back (the classic rewrite it replaces)."""
